@@ -1,12 +1,18 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import java.util.concurrent.atomic.AtomicLong
 
 /** Per-round benchmark main (driver contract): times the headline queries
   * on SPARK_GRAFT_SF_DIR and the flagship image pipeline, prints ONE JSON
   * line. `value` = total seconds over the headline set; extra key
   * `pipeline_images_per_sec` carries the north-rule throughput metric.
+  * SPARK_GRAFT_ONLY=<name,...> times those catalog queries instead of the
+  * headline set. Per query the line carries its wall (`queries`, -1 when
+  * it failed), its Spark job count (`query_jobs`), and every failure with
+  * its message (`failed`, `n_failed`).
   *
   * The emitted line is a GATED artifact (round-3 bwgate methodology,
   * BENCH/BASELINE.md): a memory-bandwidth probe runs before and after
@@ -111,33 +117,71 @@ object Bench {
     }.toDF("region_id", "wkb")
   }
 
+  /** One query's record: min wall over the passes that succeeded (-1 when
+    * none did), the Spark jobs of that pass including those run while
+    * building the DataFrame, and the failure message when no pass
+    * succeeded. */
+  final case class QueryRun(wallSec: Double, jobs: Long, error: Option[String])
+
+  def failureMessage(e: Throwable): String =
+    Option(e.getMessage).getOrElse(e.getClass.getName).take(300)
+
+  /** Times each of `names` from `registry` over `passes` passes into the
+    * noop sink. A name missing from `registry` and a query that throws in
+    * every pass come back with `error` set, never dropped; a query that
+    * fails only some passes reports the min over the others. */
+  def runQueries(spark: SparkSession,
+                 registry: Map[String, (SparkSession, String) => DataFrame],
+                 sfDir: String, names: Seq[String], passes: Int): Seq[(String, QueryRun)] = {
+    val sc = spark.sparkContext
+    val started = new AtomicLong()
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
+    }
+    def jobs(): Long = { org.apache.spark.GraftListenerBus.drain(sc); started.get() }
+    sc.addSparkListener(counter)
+    try names.map { name =>
+      name -> (registry.get(name) match {
+        case None => QueryRun(-1, 0, Some("not in SparkEntry.queries"))
+        case Some(query) =>
+          val runs = (1 to passes).map { _ =>
+            val j0 = jobs()
+            val t0 = System.nanoTime()
+            val run = try {
+              query(spark, sfDir).write.format("noop").mode("overwrite").save()
+              Right((System.nanoTime() - t0) / 1e9)
+            } catch { case e: Throwable => Left(e) }
+            finally graft.pipeline.Caches.release()
+            run.map(wall => (wall, jobs() - j0))
+          }
+          val good = runs.collect { case Right(run) => run }
+          if (good.nonEmpty) { val (wall, n) = good.minBy(_._1); QueryRun(wall, n, None) }
+          else QueryRun(-1, 0, Some(failureMessage(runs.collect { case Left(e) => e }.last)))
+      })
+    } finally sc.removeSparkListener(counter)
+  }
+
+  /** The per-query fields of the bench line, without the enclosing braces. */
+  def queryFields(results: Seq[(String, QueryRun)]): String = {
+    def obj(kv: Seq[(String, String)]) =
+      kv.map { case (k, v) => s"${Json.quote(k)}:$v" }.mkString("{", ",", "}")
+    val failed = results.collect { case (n, QueryRun(_, _, Some(msg))) => n -> Json.quote(msg) }
+    s""""queries":${obj(results.map { case (n, r) => n -> f"${r.wallSec}%.3f" })},""" +
+      s""""query_jobs":${obj(results.map { case (n, r) => n -> r.jobs.toString })},""" +
+      s""""failed":${obj(failed)},"n_failed":${failed.size}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val passes = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt)
     val (bwPre4, bwPre16) = graft.tools.BwProbe.pair()
     val spark = buildSession(cpus)
-    val qs = SparkEntry.queries
     // untimed warm-up: parquet footers, codegen, corpus materialization
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
     graft.gen.Fixtures.imagesFromParts(spark, sfDir)
-    // optional focus list for iterating on specific queries' cost
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val results = Headline.filter(qs.contains)
-      .filter(n => only.forall(_.contains(n))).map { name =>
-      val walls = (1 to passes).map { _ =>
-        val t0 = System.nanoTime()
-        val ok = try { qs(name)(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case _: Throwable => false }
-          finally graft.pipeline.Caches.release()
-        if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      }
-      // min over the SUCCESSFUL walls (a transient single-pass failure must
-      // not silently drop the query from the total); -1 only if all fail
-      val good = walls.filter(_ >= 0)
-      name -> (if (good.isEmpty) -1.0 else good.min)
-    }
+    val results = runQueries(spark, SparkEntry.queries, sfDir, SparkEntry.selected(Headline), passes)
+    results.foreach { case (n, r) => r.error.foreach(msg => System.err.println(s"[bench] $n failed: $msg")) }
     val benchN = sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "8000").toLong
     val (nImages, pipeSec) = (1 to passes).map(_ => pipelineThroughput(spark, benchN)).minBy(_._2)
     val ips = nImages / pipeSec
@@ -145,8 +189,8 @@ object Bench {
     val (bwPost4, bwPost16) = graft.tools.BwProbe.pair()
     val gated = graft.tools.BwProbe.healthy(bwPre4, bwPre16) &&
       graft.tools.BwProbe.healthy(bwPost4, bwPost16)
-    val qJson = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum + pipeSec
-    println(f"""{"metric":"headline_total","value":$total%.3f,"unit":"sec","queries":$qJson,"sf":"$sfDir","pipeline_images":$nImages,"pipeline_sec":$pipeSec%.3f,"pipeline_images_per_sec":$ips%.1f,"cpus":"$cpus","passes":$passes,"bw_pre_t4_gbps":$bwPre4%.1f,"bw_pre_t16_gbps":$bwPre16%.1f,"bw_post_t4_gbps":$bwPost4%.1f,"bw_post_t16_gbps":$bwPost16%.1f,"bw_gated":$gated}""")
+    // a failed query has no wall to add: it is reported under `failed`
+    val total = results.map(_._2.wallSec).filter(_ >= 0).sum + pipeSec
+    println(f"""{"metric":"headline_total","value":$total%.3f,"unit":"sec",${queryFields(results)},"sf":${Json.quote(sfDir)},"pipeline_images":$nImages,"pipeline_sec":$pipeSec%.3f,"pipeline_images_per_sec":$ips%.1f,"cpus":"$cpus","passes":$passes,"bw_pre_t4_gbps":$bwPre4%.1f,"bw_pre_t16_gbps":$bwPre16%.1f,"bw_post_t4_gbps":$bwPost4%.1f,"bw_post_t16_gbps":$bwPost16%.1f,"bw_gated":$gated}""")
   }
 }

@@ -26,6 +26,14 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map { case (n, f, _) => n -> f }.toMap
 
+  /** SPARK_GRAFT_ONLY=<name,...> replaces a main's `default` query list
+    * (Bench: Headline; Verify and PlanAudit: every registered query). The
+    * names are not checked here: each main reports an unknown one. */
+  def selected(default: Seq[String]): Seq[String] =
+    sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      .getOrElse(default)
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops
     * (raster kernels, LSH internals) → driver records rows-only check. */

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.Json.{quote => q}
 import java.nio.file.{Files, Paths, StandardCopyOption}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -23,27 +23,8 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.buildSession(cpus)
     new java.io.File(outDir).mkdirs()
-
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 
     // oracle SQL first: a run killed mid-query still leaves a comparable
     // artifact for every query dir that finished.
@@ -51,10 +32,8 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
 
-    // local-iteration filter (unset in driver runs → all queries)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
+    // local-iteration selection (unset → all queries)
+    val names = SparkEntry.selected(SparkEntry.queries.keys.toSeq.sorted)
 
     final case class Res(name: String, rows: Long, wallMs: Long, err: Option[String])
     val results = new java.util.concurrent.ConcurrentHashMap[String, Res]()
@@ -78,12 +57,13 @@ object Verify {
     writeSummary()
 
     def runOne(name: String): Unit = {
-      val fn = SparkEntry.queries(name)
       val qt0 = System.nanoTime()
       // scope releases even when the query throws (errOpt carries it out)
       val (errOpt, _) = graft.pipeline.Caches.scoped() {
         try {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          val query = SparkEntry.queries.getOrElse(name,
+            throw new NoSuchElementException("not in SparkEntry.queries"))
+          query(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
           None
         } catch { case e: Throwable => Some(e) }
@@ -96,7 +76,7 @@ object Verify {
         case Some(e) =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
           Res(name, -1L, (System.nanoTime() - qt0) / 1000000,
-            Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(300)))
+            Some(Bench.failureMessage(e)))
       }
       results.put(name, res)
       writeSummary()

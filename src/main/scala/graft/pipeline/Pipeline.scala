@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.security.MessageDigest
+import graft.Json.{quote => q}
 
 /** Staged pipeline runner with Iceberg-style checkpointing (SURVEY.md §7.4).
   *
@@ -29,14 +30,6 @@ object Pipeline {
   def sha256(s: String): String =
     MessageDigest.getInstance("SHA-256").digest(s.getBytes("UTF-8"))
       .map(b => f"$b%02x").mkString
-
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 
   def manifestPath(root: String, stage: String) = Paths.get(root, stage, "_manifest.json")
   def dataPath(root: String, stage: String): String = Paths.get(root, stage, "data").toString
