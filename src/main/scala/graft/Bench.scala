@@ -90,9 +90,7 @@ object Bench {
     val t0 = System.nanoTime()
     // stats + footprint + the region PIP probe all ride ONE codegen span
     // over the persisted corpus: the region layer is dim-sized, so the
-    // join is a broadcast STR-tree probe (envMatchIndexed) — the former
-    // envJoin + dropDuplicates shape shuffled image BYTES through a
-    // cell-explode Exchange and TWO dedup Exchanges; now zero shuffle
+    // join is a broadcast STR-tree probe (envMatchIndexed): zero shuffle
     // before the single tile-key Exchange in baseTiles
     val joined = images
       .withColumn("stats", image_stats(col("bytes"), col("fmt"), col("w"), col("h")))

@@ -27,6 +27,19 @@ case class CellOf(first: Expression, second: Expression, third: Expression)
     copy(first = f, second = s, third = t)
 }
 
+/** The canonical cell of an envelope pair: cell_of the min corner of their
+  * intersection, (max(minx_a, minx_b), max(miny_a, miny_b)). When the
+  * closed envelopes intersect, that corner lies in both, and
+  * CellIndex.cover is monotone in cellX/cellY, so the cell is in both
+  * cover lists. A two-sided cell join that keeps a pair only on this cell
+  * meets each pair exactly once, with no dedup pass. */
+object CanonicalCell {
+  def apply(envA: Expression, envB: Expression, level: Expression): Expression = {
+    def corner(i: Int) = Greatest(Seq(GetArrayItem(envA, Literal(i)), GetArrayItem(envB, Literal(i))))
+    CellOf(corner(0), corner(1), level)
+  }
+}
+
 /** hex_of(lon, lat, size) → packed axial hex cell id (core.Hex — the
   * H3-style hexagonal binning; `size` = circumradius in degrees). */
 case class HexOf(first: Expression, second: Expression, third: Expression)

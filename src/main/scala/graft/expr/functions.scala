@@ -32,6 +32,9 @@ object functions {
   def cell_of(lon: Column, lat: Column, level: Int): Column =
     toCol(CellOf(toExpr(lon), toExpr(lat), org.apache.spark.sql.catalyst.expressions.Literal(level)))
 
+  def canonical_cell(envA: Column, envB: Column, level: Int): Column =
+    toCol(CanonicalCell(toExpr(envA), toExpr(envB), org.apache.spark.sql.catalyst.expressions.Literal(level)))
+
   def hex_of(lon: Column, lat: Column, size: Double): Column =
     toCol(HexOf(toExpr(lon), toExpr(lat), org.apache.spark.sql.catalyst.expressions.Literal(size)))
 

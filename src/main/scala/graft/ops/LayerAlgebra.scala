@@ -11,8 +11,8 @@ import graft.expr.functions._
   * Distributed shape shared by every op: both layers explode their
   * geometry envelopes to covering cells at one level, pair on the cell
   * equi-join (the scalable replacement for the reference's per-feature
-  * SetSpatialFilterRect index walk), refine by exact geometry overlay, and
-  * dedup pairs that met on several cells by (aKey, bKey). Per-pair
+  * SetSpatialFilterRect index walk), keep each pair only on its canonical
+  * cell (SpatialJoin.envPairs), and refine by exact geometry overlay. Per-pair
   * geometry kernels are core.Clip (convex method/clip geometries — the
   * engine's whole clip surface: boxes, tiles, envelopes, hulls).
   *
@@ -29,38 +29,31 @@ import graft.expr.functions._
   */
 object LayerAlgebra {
 
-  /** Candidate pairs whose envelopes intersect, one row per (aKey, bKey). */
-  def pairGeoms(a: DataFrame, b: DataFrame, aKey: String, bKey: String,
-                aWkb: String, bWkb: String, level: Int = 6): DataFrame = {
-    val l = a.withColumn("__cell", explode(cells_at(st_env(col(aWkb)), level)))
-    val r = b.withColumn("__cell", explode(cells_at(st_env(col(bWkb)), level)))
-    l.join(r, Seq("__cell"))
-      .filter(st_intersects_env(col(bWkb), st_env(col(aWkb))))
-      .drop("__cell")
-      .dropDuplicates(aKey, bKey)
-  }
+  /** Candidate pairs whose envelopes intersect, one row per pair. */
+  def pairGeoms(a: DataFrame, b: DataFrame, aWkb: String, bWkb: String, level: Int = 6): DataFrame =
+    SpatialJoin.envPairs(a, b, st_env(col(aWkb)), st_env(col(bWkb)), level,
+      st_intersects_env(col(bWkb), st_env(col(aWkb))))
 
   /** Intersection: one row per intersecting pair, fields from both,
     * geom = a ∩ b (pairs whose exact intersection is empty are dropped). */
-  def intersection(a: DataFrame, b: DataFrame, aKey: String, bKey: String,
+  def intersection(a: DataFrame, b: DataFrame,
                    aWkb: String = "wkb_a", bWkb: String = "wkb_b", level: Int = 6): DataFrame =
-    pairGeoms(a, b, aKey, bKey, aWkb, bWkb, level)
+    pairGeoms(a, b, aWkb, bWkb, level)
       .withColumn("geom", st_intersection(col(aWkb), col(bWkb)))
       .filter(col("geom").isNotNull)
 
   /** Per-input-feature method-geometry gather: (aKey, __clips array). */
-  private def clipsPerFeature(a: DataFrame, b: DataFrame, aKey: String, bKey: String,
+  private def clipsPerFeature(a: DataFrame, b: DataFrame, aKey: String,
                               aWkb: String, bWkb: String, level: Int): DataFrame =
-    pairGeoms(a.select(col(aKey), col(aWkb)), b.select(col(bKey), col(bWkb)),
-      aKey, bKey, aWkb, bWkb, level)
+    pairGeoms(a.select(col(aKey), col(aWkb)), b.select(col(bWkb)), aWkb, bWkb, level)
       .groupBy(col(aKey))
       .agg(collect_list(col(bWkb)).as("__clips"))
 
   /** Erase: input features minus every overlapping method geometry;
     * features fully erased are dropped, untouched features pass through. */
-  def erase(a: DataFrame, b: DataFrame, aKey: String, bKey: String,
+  def erase(a: DataFrame, b: DataFrame, aKey: String,
             aWkb: String = "wkb_a", bWkb: String = "wkb_b", level: Int = 6): DataFrame = {
-    val hits = clipsPerFeature(a, b, aKey, bKey, aWkb, bWkb, level)
+    val hits = clipsPerFeature(a, b, aKey, aWkb, bWkb, level)
     a.join(hits, Seq(aKey), "left")
       .withColumn("geom", st_difference_all(col(aWkb), col("__clips")))
       .filter(col("geom").isNotNull)
@@ -72,10 +65,9 @@ object LayerAlgebra {
     * (exact for disjoint method geometries, e.g. region/tile grids;
     * overlapping method geometries contribute overlapping parts, same as
     * the per-pair reference loop). */
-  def clip(a: DataFrame, b: DataFrame, aKey: String, bKey: String,
+  def clip(a: DataFrame, b: DataFrame, aKey: String,
            aWkb: String = "wkb_a", bWkb: String = "wkb_b", level: Int = 6): DataFrame = {
-    val pieces = pairGeoms(a.select(col(aKey), col(aWkb)), b.select(col(bKey), col(bWkb)),
-      aKey, bKey, aWkb, bWkb, level)
+    val pieces = pairGeoms(a.select(col(aKey), col(aWkb)), b.select(col(bWkb)), aWkb, bWkb, level)
       .withColumn("__piece", st_intersection(col(aWkb), col(bWkb)))
       .filter(col("__piece").isNotNull)
       .groupBy(col(aKey))
@@ -86,8 +78,8 @@ object LayerAlgebra {
   /** SymDifference: (A − B) ∪ (B − A); fields of both, absent side null. */
   def symDifference(a: DataFrame, b: DataFrame, aKey: String, bKey: String,
                     aWkb: String = "wkb_a", bWkb: String = "wkb_b", level: Int = 6): DataFrame = {
-    val aOnly = erase(a, b, aKey, bKey, aWkb, bWkb, level)
-    val bOnly = erase(b, a, bKey, aKey, bWkb, aWkb, level)
+    val aOnly = erase(a, b, aKey, aWkb, bWkb, level)
+    val bOnly = erase(b, a, bKey, bWkb, aWkb, level)
     aOnly.unionByName(bOnly, allowMissingColumns = true)
   }
 
@@ -95,24 +87,24 @@ object LayerAlgebra {
     * (ogrlayer.cpp:5803 result composition). */
   def union(a: DataFrame, b: DataFrame, aKey: String, bKey: String,
             aWkb: String = "wkb_a", bWkb: String = "wkb_b", level: Int = 6): DataFrame = {
-    val both = intersection(a, b, aKey, bKey, aWkb, bWkb, level)
+    val both = intersection(a, b, aWkb, bWkb, level)
     both.unionByName(symDifference(a, b, aKey, bKey, aWkb, bWkb, level), allowMissingColumns = true)
   }
 
   /** Identity: input features split by the method layer — A∩B pieces plus
     * the A remainders (method fields null on remainders). */
-  def identity(a: DataFrame, b: DataFrame, aKey: String, bKey: String,
+  def identity(a: DataFrame, b: DataFrame, aKey: String,
                aWkb: String = "wkb_a", bWkb: String = "wkb_b", level: Int = 6): DataFrame = {
-    val both = intersection(a, b, aKey, bKey, aWkb, bWkb, level)
-    both.unionByName(erase(a, b, aKey, bKey, aWkb, bWkb, level), allowMissingColumns = true)
+    val both = intersection(a, b, aWkb, bWkb, level)
+    both.unionByName(erase(a, b, aKey, aWkb, bWkb, level), allowMissingColumns = true)
   }
 
   /** Update: method features patch over the input — input minus method
     * coverage, plus the method features themselves (input schema kept;
     * method columns mapped by name, geometry column renamed to `geom`). */
-  def update(a: DataFrame, b: DataFrame, aKey: String, bKey: String,
+  def update(a: DataFrame, b: DataFrame, aKey: String,
              aWkb: String = "wkb_a", bWkb: String = "wkb_b", level: Int = 6): DataFrame = {
-    val patched = erase(a, b, aKey, bKey, aWkb, bWkb, level)
+    val patched = erase(a, b, aKey, aWkb, bWkb, level)
     val bAsGeom = b.withColumn("geom", col(bWkb))
     patched.unionByName(bAsGeom, allowMissingColumns = true)
   }

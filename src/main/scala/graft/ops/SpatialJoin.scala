@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.expr.functions._
 
@@ -14,21 +14,18 @@ import graft.expr.functions._
   * the two-phase contract of OGRLayer::FilterGeometry
   * (ogrlayer.cpp:4004-4072).
   *
-  * Each (point, polygon) pair meets on exactly one cell (the point's), so
-  * no post-join dedup is needed.
+  * Each (point, polygon) pair meets on exactly one cell (the point's);
+  * two-sided envelope joins keep each pair only on its canonical cell
+  * ([[envPairs]]). Neither needs a post-join dedup.
   */
 object SpatialJoin {
 
   /** points(…, lonCol, latCol) ⋈ polys(…, wkbCol) on exact containment. */
   def pipJoin(points: DataFrame, polys: DataFrame, level: Int = 7,
               lonCol: String = "lon", latCol: String = "lat",
-              wkbCol: String = "wkb"): DataFrame = {
-    val p = polys.withColumn("__cell", explode(cells_at(st_env(col(wkbCol)), level)))
-    val q = points.withColumn("__cell", cell_of(col(lonCol), col(latCol), level))
-    q.join(p, Seq("__cell"))
-      .filter(st_contains_point(col(wkbCol), col(lonCol), col(latCol)))
-      .drop("__cell")
-  }
+              wkbCol: String = "wkb"): DataFrame =
+    pipOn(points, polys, cell_of(col(lonCol), col(latCol), level),
+      cells_at(st_env(col(wkbCol)), level), lonCol, latCol, wkbCol)
 
   /** [[pipJoin]] keyed on HEXAGONAL cells (core.Hex) instead of quadkey
     * cells — the cell-system-agnostic claim made concrete: the polygon
@@ -42,50 +39,43 @@ object SpatialJoin {
     * multi-level pruning). */
   def hexPipJoin(points: DataFrame, polys: DataFrame, size: Double = 4.0,
                  lonCol: String = "lon", latCol: String = "lat",
-                 wkbCol: String = "wkb"): DataFrame = {
-    val p = polys.withColumn("__hex", explode(hex_cover(st_env(col(wkbCol)), size)))
-    val q = points.withColumn("__hex", hex_of(col(lonCol), col(latCol), size))
-    q.join(p, Seq("__hex"))
+                 wkbCol: String = "wkb"): DataFrame =
+    pipOn(points, polys, hex_of(col(lonCol), col(latCol), size),
+      hex_cover(st_env(col(wkbCol)), size), lonCol, latCol, wkbCol)
+
+  /** The PIP body shared by both cell systems: the point side carries its
+    * one cell, the polygon side explodes its cover, and the exact PIP
+    * refine rides the cell equi-join. A hot cell is split at runtime by
+    * AQE's skew join (spark.sql.adaptive.skewJoin), not by a salt. */
+  private def pipOn(points: DataFrame, polys: DataFrame, pointCell: Column, cover: Column,
+                    lonCol: String, latCol: String, wkbCol: String): DataFrame =
+    points.withColumn("__cell", pointCell)
+      .join(polys.withColumn("__cell", explode(cover)), Seq("__cell"))
       .filter(st_contains_point(col(wkbCol), col(lonCol), col(latCol)))
-      .drop("__hex")
-  }
+      .drop("__cell")
 
   /** envelope(geom) ⋈ polys on exact polygon×box intersection — the
     * footprint×region join (Clip/Intersection-style layer algebra seed).
-    * Left side must carry an `envCol` array<double>[4]. Cell lists of BOTH
-    * sides are exploded, so pairs can meet on several cells → dedup by the
-    * provided key columns. */
-  def envJoin(lefts: DataFrame, polys: DataFrame, leftKey: String, polyKey: String,
-              level: Int = 6, envCol: String = "env", wkbCol: String = "wkb"): DataFrame = {
-    val l = lefts.withColumn("__cell", explode(cells_at(col(envCol), level)))
-    val p = polys.withColumn("__cell", explode(cells_at(st_env(col(wkbCol)), level)))
-    l.join(p, Seq("__cell"))
-      .filter(st_intersects_env(col(wkbCol), col(envCol)))
-      .drop("__cell")
-      .dropDuplicates(leftKey, polyKey)
-  }
+    * Left side must carry an `envCol` array<double>[4]. One row per
+    * intersecting pair (see [[envPairs]]). */
+  def envJoin(lefts: DataFrame, polys: DataFrame, level: Int = 6,
+              envCol: String = "env", wkbCol: String = "wkb"): DataFrame =
+    envPairs(lefts, polys, col(envCol), st_env(col(wkbCol)), level,
+      st_intersects_env(col(wkbCol), col(envCol)))
 
-  /** Salted PIP join for hot-cell skew: polygon cell rows replicate into
-    * `salt` buckets, each point picks one pseudo-random bucket, and the
-    * equi-join key becomes (cell, salt). Hot cells (a world-spanning
-    * region, a dense metro cell) split across `salt` reducers instead of
-    * one. Semantics identical to pipJoin (each point still meets each
-    * polygon exactly once — on the point's cell and the point's salt).
-    * Use when AQE skew splitting isn't enough (e.g. the build side is too
-    * big to broadcast AND one cell dominates). */
-  def pipJoinSalted(points: DataFrame, polys: DataFrame, level: Int = 7, salt: Int = 8,
-                    lonCol: String = "lon", latCol: String = "lat",
-                    wkbCol: String = "wkb"): DataFrame = {
-    val p = polys
-      .withColumn("__cell", explode(cells_at(st_env(col(wkbCol)), level)))
-      .withColumn("__salt", explode(org.apache.spark.sql.functions.array((0 until salt).map(lit): _*)))
-    val q = points
-      .withColumn("__cell", cell_of(col(lonCol), col(latCol), level))
-      .withColumn("__salt", pmod(hash(col(lonCol), col(latCol)), lit(salt)))
-    q.join(p, Seq("__cell", "__salt"))
-      .filter(st_contains_point(col(wkbCol), col(lonCol), col(latCol)))
-      .drop("__cell", "__salt")
-  }
+  /** The two-sided cell join under [[envJoin]] and LayerAlgebra.pairGeoms:
+    * both sides explode their envelope covers and equi-join on the cell,
+    * and a pair is kept only on its canonical cell (graft.expr.CanonicalCell),
+    * so each pair surfaces once with no dedup shuffle. `refine`, the
+    * caller's exact test, must imply envelope intersection. It sits in
+    * one filter behind the canonical test, so Catalyst pushes both into
+    * the join condition in that order and never refines a duplicate. */
+  private[ops] def envPairs(a: DataFrame, b: DataFrame, aEnv: Column, bEnv: Column, level: Int,
+                            refine: Column): DataFrame =
+    a.withColumn("__cell", explode(cells_at(aEnv, level)))
+      .join(b.withColumn("__cell", explode(cells_at(bEnv, level))), Seq("__cell"))
+      .filter(col("__cell") === canonical_cell(aEnv, bEnv, level) && refine)
+      .drop("__cell")
 
   /** Broadcast-indexed PIP join: the polygon side is collected, bulk-
     * loaded into a packed STR R-tree (core.StrTree — the per-partition
@@ -154,14 +144,19 @@ object SpatialJoin {
     }
   }
 
-  /** Spatial semi-join: rows of `lefts` whose point falls in ANY polygon
-    * (Clip §2.3); anti = rows in none (Erase §2.3). */
+  /** Spatial semi-join: rows of `points` whose point falls in ANY polygon
+    * (Clip §2.3); anti = rows in none (Erase §2.3). A native left
+    * semi/anti join on the point's cell with the exact PIP test in the
+    * join condition, so every input row lands on exactly one side and
+    * keeps its multiplicity. */
   def pipSemi(points: DataFrame, polys: DataFrame, level: Int = 7,
               lonCol: String = "lon", latCol: String = "lat", wkbCol: String = "wkb",
               anti: Boolean = false): DataFrame = {
-    val matches = pipJoin(points, polys, level, lonCol, latCol, wkbCol)
-      .select(points.columns.map(col): _*).dropDuplicates(points.columns.toSeq)
-    if (!anti) matches
-    else points.join(matches, points.columns.toSeq, "left_anti")
+    val cells = polys.select(explode(cells_at(st_env(col(wkbCol)), level)).as("__cell"),
+      col(wkbCol).as("__wkb"))
+    points.join(cells,
+      cell_of(col(lonCol), col(latCol), level) === col("__cell")
+        && st_contains_point(col("__wkb"), col(lonCol), col(latCol)),
+      if (anti) "left_anti" else "left_semi")
   }
 }

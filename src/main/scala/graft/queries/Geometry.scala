@@ -89,8 +89,7 @@ object Geometry {
     // §2.3 Intersection with geometry output: image envelopes × region
     // boxes; per-pair clipped geometry, exact quantized area
     ("q61_layer_intersection", (s: SparkSession, dir: String) => {
-      LayerAlgebra.intersection(imageBoxes(s, dir), regionLayer(s, dir),
-        "key", "region_id", "wkb_a", "wkb_b", level = 5)
+      LayerAlgebra.intersection(imageBoxes(s, dir), regionLayer(s, dir), level = 5)
         .select(col("key"), col("region_id"), st_area2_q(col("geom"), lit(1e6)).as("iarea2q"))
     }, Some(s"""
       WITH $EnvCte, $BoxCte
@@ -104,8 +103,7 @@ object Geometry {
     // §2.3 Erase with geometry output: remainder area is exactly
     // env − Σ(disjoint region overlaps) in quantized units
     ("q62_layer_erase", (s: SparkSession, dir: String) => {
-      LayerAlgebra.erase(imageBoxes(s, dir), regionLayer(s, dir),
-        "key", "region_id", "wkb_a", "wkb_b", level = 5)
+      LayerAlgebra.erase(imageBoxes(s, dir), regionLayer(s, dir), "key", level = 5)
         .select(col("key"), st_area2_q(col("geom"), lit(1e6)).as("rem2q"))
     }, Some(s"""
       WITH $EnvCte, $BoxCte,
@@ -312,8 +310,7 @@ object Geometry {
     // re-derived in closed-form greatest/least SQL (geometry-type-generic
     // Intersection, ogrlayer.cpp:5385)
     ("q86_line_clip", (s: SparkSession, dir: String) => {
-      LayerAlgebra.intersection(Fixtures.linesFromCustomers(s, dir),
-          regionLayer(s, dir), "line_id", "region_id", "wkb_a", "wkb_b", level = 5)
+      LayerAlgebra.intersection(Fixtures.linesFromCustomers(s, dir), regionLayer(s, dir), level = 5)
         .withColumn("cenv", st_env(col("geom")))
         .select(col("line_id"), col("region_id"),
           round(col("cenv")(0) * 1e6).cast("bigint").as("x0q"),
@@ -391,8 +388,7 @@ object Geometry {
     ("q96_point_overlay", (s: SparkSession, dir: String) => {
       val pts = Fixtures.pointsFromOrders(s, dir)
         .select(col("point_id"), st_make_point(col("lon"), col("lat")).as("wkb_a"))
-      LayerAlgebra.intersection(pts, regionLayer(s, dir),
-          "point_id", "region_id", "wkb_a", "wkb_b", level = 5)
+      LayerAlgebra.intersection(pts, regionLayer(s, dir), level = 5)
         .withColumn("env", st_env(col("geom")))
         .select(col("point_id"), col("region_id"),
           round(col("env")(0) * 1000000.0).cast("bigint").as("xq"),

@@ -1286,7 +1286,7 @@ object Geospatial {
         .filter(col("srid") === 4326 && col("fmt") =!= "jpeg" && col("w") <= 64)
         .withColumn("env", footprint(col("gt"), col("w"), col("h"), col("srid")))
       val zones = Fixtures.regionBoxes(s, dir)
-      SpatialJoin.envJoin(images, zones, "key", "region_id", level = 5)
+      SpatialJoin.envJoin(images, zones, level = 5)
         .withColumn("zs", zone_stats(col("bytes"), col("fmt"), Tiling.meta9, col("wkb")))
         .filter(col("zs")(0) > 0)
         .groupBy(col("region_id"))
@@ -1311,7 +1311,7 @@ object Geospatial {
         .filter(col("srid") === 4326 && col("fmt") =!= "jpeg" && col("w") <= 64)
         .withColumn("env", footprint(col("gt"), col("w"), col("h"), col("srid")))
       val zones = Fixtures.regionBoxes(s, dir)
-      SpatialJoin.envJoin(images, zones, "key", "region_id", level = 5)
+      SpatialJoin.envJoin(images, zones, level = 5)
         .withColumn("zs", zone_stats_full(col("bytes"), col("fmt"), Tiling.meta9, col("wkb"), lit(1)))
         .filter(col("zs").isNotNull)
         .select(col("key"), col("region_id"),
@@ -2384,7 +2384,7 @@ object Geospatial {
         .filter(col("srid") === 4326 && col("key") % 10 === 0)
         .withColumn("env", footprint(col("gt"), col("w"), col("h"), col("srid")))
       val zones = Fixtures.regionBoxes(s, dir)
-      SpatialJoin.envJoin(images, zones, "key", "region_id", level = 5)
+      SpatialJoin.envJoin(images, zones, level = 5)
         .withColumn("tile", tile_cover(col("env"), 5, 5)(0))
         .withColumn("buf", warp_tile_cut(col("bytes"), col("fmt"), Tiling.meta9,
           col("tile"), lit("near"), col("wkb")))
@@ -3012,9 +3012,9 @@ object Geospatial {
     }),
 
     // §2.3 skew profile of the PIP-join key: points-per-cell quantiles at
-    // level 7 — the monitoring query a 100 TB ingest runs BEFORE picking
-    // the salt factor for the cell equi-join (SpatialJoin.pipJoinSalted's
-    // input: p99/p100 vs mean says how hot the hottest cells are). Exact
+    // level 7 — the monitoring query that says how hot the hottest cells
+    // of the cell equi-join are (p99/p100 vs mean), i.e. how much work
+    // AQE's runtime skew split has to absorb for SpatialJoin.pipJoin. Exact
     // via ops.Quantiles' histogram shape: the shuffle carries one row per
     // occupied cell, then one row per distinct per-cell count. Oracle
     // re-derives the level-7 cell grid (the q157 arithmetic at 128×128)
@@ -3246,7 +3246,7 @@ object Geospatial {
       .withColumn("stats", image_stats(col("bytes"), col("fmt"), col("w"), col("h")))
       .withColumn("env", footprint(col("gt"), col("w"), col("h"), col("srid")))
     val regions = Fixtures.regionBoxes(s, dir)
-    val joined = SpatialJoin.envJoin(images, regions, "key", "region_id", level = 5)
+    val joined = SpatialJoin.envJoin(images, regions, level = 5)
     joined
       .withColumn("tile", explode(tile_cover(col("env"), 0, 4)))
       .groupBy(tile_z(col("tile")).as("z"))

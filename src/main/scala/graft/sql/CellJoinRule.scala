@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.LongType
-import graft.expr.{CellOf, CellsAt, StContainsPoint, StIntersects, WkbEnvelope}
+import graft.expr.{CanonicalCell, CellOf, CellsAt, StContainsPoint, StIntersects, WkbEnvelope}
 
 /** Optimizer rule rewriting brute-force spatial-predicate joins into
   * cell-keyed equi-joins (SURVEY.md §4 "optional Rule: auto-rewrite
@@ -29,19 +29,17 @@ import graft.expr.{CellOf, CellsAt, StContainsPoint, StIntersects, WkbEnvelope}
   *    arbitrary geometry pairs, ogrlayer.cpp:4004-4072): BOTH sides
   *    explode their envelope covers and join on the cell. A pair whose
   *    envelopes share k cells would surface k times, so the rewrite adds
-  *    a CANONICAL-CELL conjunct — the pair is kept only on the cell of
-  *    the envelope-intersection's min corner
-  *    (max(minxₐ,minx_b), max(minyₐ,miny_b)), a point that lies in both
-  *    envelopes whenever they intersect, hence in both cover lists —
-  *    restoring exactly-once multiplicity with no dropDuplicates (and no
-  *    shuffle for it) in the plan.
+  *    the same canonical-cell conjunct the DataFrame operators use
+  *    (graft.expr.CanonicalCell): the pair is kept only on the cell of
+  *    its envelope intersection's min corner, restoring exactly-once
+  *    multiplicity with no dedup (and no shuffle for it) in the plan.
   *
   * Without the rule Catalyst can only plan these as
   * BroadcastNestedLoopJoin / CartesianProduct — O(|A|·|B|) comparisons.
-  * Output schema is restored by a trailing Project. Level via
-  * `spark.gdalspark.cellJoinLevel` (default 7 for PIP, one coarser for
-  * geometry pairs whose explode is two-sided). Idempotent: rewritten
-  * joins contain a CellOf/CellsAt conjunct and no longer match.
+  * Output schema is restored by a trailing Project. The cell level is the
+  * constructor's `level` (7 for PIP; geometry pairs, whose explode is
+  * two-sided, use one level coarser, 6). Idempotent: rewritten joins
+  * contain a CellOf/CellsAt conjunct and no longer match.
   */
 case class CellJoinRule(level: Int = 7) extends Rule[LogicalPlan] {
 
@@ -100,14 +98,8 @@ case class CellJoinRule(level: Int = 7) extends Rule[LogicalPlan] {
       unrequiredChildIndex = Nil, outer = false, qualifier = None,
       generatorOutput = Seq(bCell), child = bSide)
 
-    // canonical cell: min corner of the envelope intersection — inside
-    // both envelopes whenever they intersect, so exactly one of the k
-    // shared cells carries the pair
-    val envA = WkbEnvelope(aWkb)
-    val envB = WkbEnvelope(bWkb)
-    val cornerX = Greatest(Seq(GetArrayItem(envA, Literal(0)), GetArrayItem(envB, Literal(0))))
-    val cornerY = Greatest(Seq(GetArrayItem(envA, Literal(1)), GetArrayItem(envB, Literal(1))))
-    val canonical = EqualTo(aCell, CellOf(cornerX, cornerY, Literal(lvl)))
+    // exactly one of the k shared cells carries the pair
+    val canonical = EqualTo(aCell, CanonicalCell(WkbEnvelope(aWkb), WkbEnvelope(bWkb), Literal(lvl)))
 
     val (newLeft, newRight) =
       if (aSide eq j.left) (genA: LogicalPlan, genB: LogicalPlan)

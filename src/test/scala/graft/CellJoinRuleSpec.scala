@@ -101,7 +101,7 @@ class CellJoinRuleSpec extends AnyFunSuite {
     val viaRule = joined.as[(Long, Long)].collect().toList
     // exactly-once multiplicity (the canonical-cell conjunct)
     assert(viaRule.size == viaRule.toSet.size, "pairs must surface exactly once")
-    val viaOp = graft.ops.LayerAlgebra.pairGeoms(layerA, layerB, "a_id", "b_id", "wkb_a", "wkb_b")
+    val viaOp = graft.ops.LayerAlgebra.pairGeoms(layerA, layerB, "wkb_a", "wkb_b")
       .filter(st_intersects(col("wkb_a"), col("wkb_b")))
       .select(col("a_id"), col("b_id")).as[(Long, Long)].collect().toSet
     assert(viaRule.toSet == viaOp)

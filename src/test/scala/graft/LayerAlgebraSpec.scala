@@ -26,18 +26,41 @@ class LayerAlgebraSpec extends AnyFunSuite {
     (11L, Wkb.writeBox(10, 1, 12, 4))).toDF("b_id", "wkb_b")
 
   test("intersection emits one row per intersecting pair with exact areas") {
-    val out = LayerAlgebra.intersection(layerA, layerB, "a_id", "b_id")
-      .select(col("a_id"), col("b_id"), st_area(col("geom")).as("area"))
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    assert(out == Map(
-      (1L, 10L) -> 2.0, // [1,2]×[0,2]
-      (2L, 10L) -> 4.0, // fully inside
-      (3L, 10L) -> 2.0, // [6,7]×[0,2]
-      (4L, 11L) -> 1.0)) // [10,11]×[1,2]
+    // beside layer A: a box spanning ~11×15 level-6 cells, and one whose
+    // min corner sits on a level-6 cell corner (5.625, 2.8125)
+    val a = layerA.union(Seq(
+      (5L, Wkb.writeBox(-30, -20, 30, 20)),
+      (6L, Wkb.writeBox(5.625, 2.8125, 8, 3.5))).toDF("a_id", "wkb_a"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("a_id"), col("b_id"), st_area(col("geom")).as("area"))
+        .as[(Long, Long, Double)].collect().toSeq.sortBy(r => (r._1, r._2))
+    val out = rows(LayerAlgebra.intersection(a, layerB))
+    val brute = rows(a.crossJoin(layerB)
+      .withColumn("geom", st_intersection(col("wkb_a"), col("wkb_b")))
+      .filter(col("geom").isNotNull))
+    val expect = Seq(
+      (1L, 10L, 2.0), // [1,2]×[0,2]
+      (2L, 10L, 4.0), // fully inside
+      (3L, 10L, 2.0), // [6,7]×[0,2]
+      (4L, 11L, 1.0), // [10,11]×[1,2]
+      (5L, 10L, 24.0), // b10 fully inside
+      (5L, 11L, 6.0), // b11 fully inside
+      (6L, 10L, 1.375 * 0.1875)) // [5.625,7]×[2.8125,3]
+    for (got <- Seq(out, brute)) {
+      assert(got.map(r => (r._1, r._2)) == expect.map(r => (r._1, r._2)))
+      assert(got.zip(expect).forall { case (g, e) => math.abs(g._3 - e._3) < 1e-9 }, got)
+    }
+  }
+
+  test("q61 plan has no pair-dedup aggregate") {
+    val df = SparkEntry.queries("q61_layer_intersection")(spark, TestSpark.Sf)
+    assert(df.collect().nonEmpty)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("Aggregate"), s"q61 must not aggregate:\n$plan")
   }
 
   test("erase removes covered parts, drops swallowed features, passes untouched") {
-    val out = LayerAlgebra.erase(layerA, layerB, "a_id", "b_id")
+    val out = LayerAlgebra.erase(layerA, layerB, "a_id")
       .select(col("a_id"), st_area(col("geom")).as("area"))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
     // a2 is fully inside b10 → dropped
@@ -48,7 +71,7 @@ class LayerAlgebraSpec extends AnyFunSuite {
   }
 
   test("clip crops each input feature to the method coverage") {
-    val out = LayerAlgebra.clip(layerA, layerB, "a_id", "b_id")
+    val out = LayerAlgebra.clip(layerA, layerB, "a_id")
       .select(col("a_id"), st_area(col("geom")).as("area"))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
     assert(out.keySet == Set(1L, 2L, 3L, 4L))
@@ -71,9 +94,9 @@ class LayerAlgebraSpec extends AnyFunSuite {
   }
 
   test("identity = pieces + A remainders only; update = A−B + B features") {
-    val id = LayerAlgebra.identity(layerA, layerB, "a_id", "b_id").collect()
+    val id = LayerAlgebra.identity(layerA, layerB, "a_id").collect()
     assert(id.length == 4 + 3)
-    val up = LayerAlgebra.update(layerA, layerB, "a_id", "b_id")
+    val up = LayerAlgebra.update(layerA, layerB, "a_id")
       .select(st_area(col("geom")).as("area")).collect().map(_.getDouble(0)).sum
     // A minus B (2+2+3) plus B itself (24+6)
     assert(math.abs(up - (7.0 + 30.0)) < 1e-9)
@@ -168,10 +191,10 @@ class LayerAlgebraSpec extends AnyFunSuite {
       (3L, Wkb.writePoint(25, 5))).toDF("pid", "wkb_a")
     val regions = Seq((10L, Wkb.writeBox(0, 0, 10, 10)), (20L, Wkb.writeBox(12, 0, 22, 10)))
       .toDF("rid", "wkb_b")
-    val got = LayerAlgebra.intersection(pts, regions, "pid", "rid", "wkb_a", "wkb_b", level = 3)
+    val got = LayerAlgebra.intersection(pts, regions, level = 3)
       .select("pid", "rid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == Set((1L, 10L), (2L, 20L)))
-    val erased = LayerAlgebra.erase(pts, regions, "pid", "rid", "wkb_a", "wkb_b", level = 3)
+    val erased = LayerAlgebra.erase(pts, regions, "pid", level = 3)
       .select("pid").collect().map(_.getLong(0)).toSet
     assert(erased == Set(3L))
   }

@@ -26,7 +26,7 @@ class PipelineSpec extends AnyFunSuite {
     }),
     Stage("join", Seq("decode"), "v1", (s: SparkSession, in: Map[String, DataFrame]) => {
       executed += "join"
-      SpatialJoin.envJoin(in("decode"), Fixtures.regionBoxes(s, dir), "key", "region_id", level = 5)
+      SpatialJoin.envJoin(in("decode"), Fixtures.regionBoxes(s, dir), level = 5)
         .select("key", "region_id", "env")
     }),
     Stage("tiles", Seq("join"), "v1", (_: SparkSession, in: Map[String, DataFrame]) => {

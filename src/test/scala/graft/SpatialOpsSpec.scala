@@ -36,12 +36,25 @@ class SpatialOpsSpec extends AnyFunSuite {
   }
 
   test("pipSemi/anti partition the point set") {
-    val pts = Fixtures.pointsFromOrders(spark, TestSpark.Sf).select("point_id", "lon", "lat")
+    val base = Fixtures.pointsFromOrders(spark, TestSpark.Sf)
+      .select(col("point_id"), col("lon"), col("lat"), lit("t").as("tag"))
     val polys = Fixtures.regionBoxes(spark, TestSpark.Sf)
+    // one inside row twice, and an inside row with a null attribute
+    val inRow = base.crossJoin(polys)
+      .filter(st_contains_point(col("wkb"), col("lon"), col("lat")))
+      .select(base.columns.map(col): _*).orderBy("point_id").limit(1)
+    val pts = base.union(inRow)
+      .union(inRow.withColumn("point_id", lit(-1L)).withColumn("tag", lit(null).cast("string")))
     val in = SpatialJoin.pipSemi(pts, polys)
     val out = SpatialJoin.pipSemi(pts, polys, anti = true)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Double, Double, Option[String])].collect().toSeq.sortBy(r => (r._1, r._4.isDefined))
     assert(in.count() + out.count() == pts.count())
+    assert((rows(in) ++ rows(out)).sortBy(r => (r._1, r._4.isDefined)) == rows(pts))
     assert(in.join(out, Seq("point_id"), "inner").count() == 0)
+    val inId = inRow.as[(Long, Double, Double, String)].head()._1
+    assert(in.filter(col("point_id") === inId).count() == 2, "both copies of the duplicated row")
+    assert(rows(in).exists(r => r._1 == -1L && r._4.isEmpty), "null-attribute row is inside")
   }
 
   test("Grid.dataMetrics / averageDistancePts match brute force bit-for-bit") {
@@ -109,17 +122,26 @@ class SpatialOpsSpec extends AnyFunSuite {
   }
 
   test("envJoin matches brute-force polygon-box intersection") {
+    val region12 = Fixtures.regionBoxesSpec(12)
+    // beside the fixture footprints: one envelope spanning ~15×13 level-5
+    // cells, one whose min corner sits on a level-5 cell corner (0, 0),
+    // and one whose max x touches region 12's min x exactly
+    val extra = Seq(
+      (-1L, Array(-100.0, -40.0, 60.0, 30.0)),
+      (-2L, Array(0.0, 0.0, 5.0, 5.0)),
+      (-3L, Array(-40.0, 0.0, region12._1, 2.0))).toDF("key", "env")
     val images = Fixtures.imagesFromParts(spark, TestSpark.Sf).filter(col("srid") === 4326)
       .withColumn("env", footprint(col("gt"), col("w"), col("h"), col("srid")))
       .select("key", "env")
+      .union(extra)
     val polys = Fixtures.regionBoxes(spark, TestSpark.Sf)
-    val fast = SpatialJoin.envJoin(images, polys, "key", "region_id", level = 5)
-      .select("key", "region_id").as[(Long, Long)].collect().toSet
+    val fast = SpatialJoin.envJoin(images, polys, level = 5)
+      .select("key", "region_id").as[(Long, Long)].collect().sorted.toSeq
     val brute = images.crossJoin(polys)
       .filter(st_intersects_env(col("wkb"), col("env")))
-      .select("key", "region_id").as[(Long, Long)].collect().toSet
-    assert(fast == brute)
-    assert(brute.nonEmpty)
+      .select("key", "region_id").as[(Long, Long)].collect().sorted.toSeq
+    assert(fast == brute, "same pairs, each exactly once")
+    assert(brute.count(_._1 == -1L) > 1 && brute.contains((-2L, 12L)))
   }
 
   test("envMatchIndexed counts equal the envJoin per-key match counts") {
@@ -127,7 +149,7 @@ class SpatialOpsSpec extends AnyFunSuite {
       .withColumn("env", footprint(col("gt"), col("w"), col("h"), col("srid")))
       .select("key", "env")
     val polys = Fixtures.regionBoxes(spark, TestSpark.Sf)
-    val viaJoin = SpatialJoin.envJoin(images, polys, "key", "region_id", level = 5)
+    val viaJoin = SpatialJoin.envJoin(images, polys, level = 5)
       .groupBy("key").count().as[(Long, Long)].collect().toMap
     val viaProbe = SpatialJoin.envMatchIndexed(images, polys)
       .select(col("key"), col("n_regions").cast("long"))
@@ -150,21 +172,10 @@ class SpatialOpsSpec extends AnyFunSuite {
       .filter(col("n_regions") =!= 0).count() == 0L)
   }
 
-  test("salted PIP join equals the unsalted join exactly") {
-    val pts = Fixtures.pointsFromOrders(spark, TestSpark.Sf).select("point_id", "lon", "lat")
-    val polys = Fixtures.regionBoxes(spark, TestSpark.Sf)
-    val plain = SpatialJoin.pipJoin(pts, polys).select("point_id", "region_id")
-      .as[(Long, Long)].collect().toSet
-    val salted = SpatialJoin.pipJoinSalted(pts, polys, salt = 5)
-      .select("point_id", "region_id").as[(Long, Long)].collect().toSet
-    assert(salted == plain)
-    assert(plain.nonEmpty)
-  }
-
-  test("salted PIP join at a 50%-hot cell: salt fans the hot cell out, result parity holds") {
+  test("pipJoin at a 50%-hot cell: AQE splits the hot cell") {
     // half the corpus lands in ONE level-7 cell (a dense metro), the rest
     // spreads; one region covers the hot cluster
-    val n = 4000L
+    val n = 200000L
     val pts = spark.range(n).select(col("id").as("point_id"),
         when(col("id") % 2 === 0, lit(10.0) + (col("id") % 97).cast("double") / 10000.0)
           .otherwise((col("id") * 37 % 340).cast("double") - 170.0 + 0.21).as("lon"),
@@ -174,29 +185,29 @@ class SpatialOpsSpec extends AnyFunSuite {
       (1L, Wkb.writeBox(9.5, 44.5, 10.5, 45.5)),   // covers the hot cluster
       (2L, Wkb.writeBox(-60.0, -30.0, 20.0, 50.0)), // wide box
       (3L, Wkb.writeBox(100.0, 10.0, 120.0, 30.0))).toDF("region_id", "wkb")
-    val salt = 5
-    val salted = SpatialJoin.pipJoinSalted(pts, polys, salt = salt)
-      .select("point_id", "region_id")
-    salted.collect()
-    // plan audit: the shuffle/join key carries the salt column, so the
-    // hot cell's rows split across `salt` reducers instead of one
-    val plan = salted.queryExecution.executedPlan.toString
-    val saltKeyed = raw"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin) \[__cell[^\]]*__salt".r
-    assert(saltKeyed.findFirstIn(plan).isDefined,
-      s"join key must include the salt:\n$plan")
-    // the hot cell's points actually occupy every salt bucket
-    val hotSalts = pts.filter(col("point_id") % 2 === 0)
-      .select(pmod(hash(col("lon"), col("lat")), lit(salt))).distinct().count()
-    assert(hotSalts == salt, "hot-cell points must fan across all salt buckets")
-    // exact parity with the unsalted join AND with brute force
-    val got = salted.as[(Long, Long)].collect().toSet
-    val plain = SpatialJoin.pipJoin(pts, polys).select("point_id", "region_id")
-      .as[(Long, Long)].collect().toSet
-    assert(got == plain && got.nonEmpty)
-    val brute = pts.crossJoin(polys)
-      .filter(st_contains_point(col("wkb"), col("lon"), col("lat")))
-      .select("point_id", "region_id").as[(Long, Long)].collect().toSet
-    assert(got == brute)
+    // a shuffled join over 16 partitions: the hot cell's partition is then
+    // well past skewedPartitionFactor (5) × the median and the byte threshold
+    val conf = Seq(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.shuffle.partitions" -> "16",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1024",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1024")
+    val saved = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      val joined = SpatialJoin.pipJoin(pts, polys).select("point_id", "region_id").as[(Long, Long)]
+      val got = joined.collect().sorted.toSeq
+      // no salt column: AQE reads the hot cell's partition as several splits
+      val plan = joined.queryExecution.executedPlan.toString
+      assert(plan.contains("SortMergeJoin(skew=true)"), s"hot cell must be split at runtime:\n$plan")
+      val brute = pts.crossJoin(polys)
+        .filter(st_contains_point(col("wkb"), col("lon"), col("lat")))
+        .select("point_id", "region_id").as[(Long, Long)].collect().sorted.toSeq
+      assert(got == brute && got.nonEmpty)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   test("writeTiles lays out a hive-partitioned z/x/y tree") {
